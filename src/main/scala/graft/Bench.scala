@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Scoped
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR.
@@ -69,20 +70,7 @@ object Bench {
     // five heavy queries against /tmp/sf1 — tools/check_bench_regression.py)
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // State-store confs come from the LIBRARY surface (r20): RocksDB
-    // provider (r11), changelog checkpointing (r19, 20-30% off
-    // stateful rows) and trackTotalNumberOfRows=false (r20, 5-10%) —
-    // rationale and parity evidence in graft.streaming.StateStoreConf;
-    // LogStreamSpec pins bit-parity on the hard state shapes. Batch
-    // queries never touch these.
-    val spark = graft.streaming.StateStoreConf.applyTo(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession(cpus)
 
     // warm the JVM/codegen once so per-query times measure the plan, not
     // JIT. A filtered run (tier dirs hold only documents/embeddings, so
@@ -104,7 +92,10 @@ object Bench {
         Set("q_log_autodetect_glob").filter(n => only.forall(_.contains(n)))
     var warmupOk = true
     def warmOne(n: String): Boolean =
-      try { SparkEntry.queries.get(n).foreach(_(spark, sfDir).count()); true }
+      try {
+        SparkEntry.queries.get(n).foreach(fn => Scoped.withCached(fn(spark, sfDir))(_.count()))
+        true
+      }
       catch { case e: Throwable =>
         System.err.println(s"[bench] WARM-UP FAILED for $n: ${e.getMessage}")
         false
@@ -212,7 +203,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try {
-          graft.operators.Scoped.withCached(fn(spark, sfDir))(
+          Scoped.withCached(fn(spark, sfDir))(
             _.write.format("noop").mode("overwrite").save())
           true
         }

@@ -11,6 +11,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     LogQueries.queries("q_log_parse_common")(spark, "/root/testdata/sf0.001")
 
+  /** The session graft.Bench and graft.Verify both run on: local mode
+   * over `cpus` cores, UTC, ANSI off, and the library's state-store
+   * confs — RocksDB provider (r11), changelog checkpointing (r19,
+   * 20-30% off stateful rows) and trackTotalNumberOfRows=false (r20,
+   * 5-10%); rationale and parity evidence in
+   * graft.streaming.StateStoreConf, bit-parity on the hard state shapes
+   * in LogStreamSpec. Batch queries never touch the state-store confs. */
+  private[graft] def harnessSession(cpus: String): SparkSession = {
+    val spark = graft.streaming.StateStoreConf.applyTo(SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "false")
+        .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     BQueries.queries ++ LogQueries.queries ++ CQueries.queries ++ PipeQueries.queries ++

@@ -1,23 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // State-store confs from the library surface (r20) so the
-    // correctness pass runs the exact configuration the bench times —
-    // rationale and parity evidence in graft.streaming.StateStoreConf.
-    val spark = graft.streaming.StateStoreConf.applyTo(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session, so the correctness pass runs the exact
+    // configuration the bench times
+    val spark = SparkEntry.harnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated query filter (the Bench env): fast
     // single-query iteration; the driver's full gate leaves it unset.
@@ -26,9 +16,11 @@ object Verify {
     val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter {
       case (n, _) => f(n)
     })
+    // one Scoped.withCached scope per query, as in the bench: its
+    // cached intermediates and scratch dirs are released after the write
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.operators.Scoped.withCached(fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -62,8 +62,6 @@ object CdcChunks {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  private val HEX = "0123456789abcdef".toCharArray
-
   /** First 13 hex chars of md5(bytes) parsed base-16 — bit-identical to
    * `conv(substring(md5(x), 1, 13), 16, 10)` / DuckDB
    * `('0x'||substr(md5(x),1,13))::BIGINT` (52 bits, always ≥ 0). */

@@ -652,7 +652,7 @@ object Dedup {
       cellCols: Seq[String],
       idCol: String,
       threshold: Double,
-      maxCellSize: Int = 0): DataFrame = {
+      maxCellSize: Int): DataFrame = {
     val dropped =
       if (maxCellSize <= 0) allPairsDroppedIds(assigned, cellCols, idCol, threshold)
       else cappedDroppedIds(assigned, cellCols, idCol, threshold, maxCellSize)
@@ -1059,10 +1059,6 @@ object Dedup {
    * signature columns "s0".."s{sigs-1}". */
   private def md5GramHash: Column =
     conv(substring(md5(col("g")), 1, 13), 16, 10).cast(LongType)
-
-  private def md5SlotMin(j: Int): Column =
-    min(conv(substring(md5(concat(col("h").cast(StringType), lit(s"_$j"))),
-      1, 13), 16, 10).cast(LongType)).as(s"s$j")
 
   private def sigBandStructs(sigs: Int, bands: Int): Seq[Column] = {
     val rpb = sigs / bands

@@ -34,25 +34,36 @@ import org.apache.spark.storage.StorageLevel
  * applies to bare operator calls.
  */
 object Scoped {
-  private val collector = new ThreadLocal[ListBuffer[DataFrame]]
+  private val collector = new ThreadLocal[ListBuffer[() => Unit]]
 
   /** Persist `df` (MEMORY_AND_DISK) and, when inside [[withCached]],
    * register it for release when the scope's action completes. */
   private[graft] def persistTracked(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val buf = collector.get()
-    if (buf != null) buf += p
+    onRelease(() => p.unpersist(blocking = false))
     p
   }
 
+  /** Run `release` when the innermost enclosing [[withCached]] scope
+   * exits (after its action). Returns false — and never runs `release`
+   * — outside any scope, so callers keep their own fallback (a plain
+   * persist stays cached; scratch dirs wait for the JVM-exit sweep). */
+  private[graft] def onRelease(release: () => Unit): Boolean = {
+    val buf = collector.get()
+    if (buf != null) buf += release
+    buf != null
+  }
+
   /** Build a DataFrame, run `action` on it (the materialization —
-   * write/collect/count), then unpersist every intermediate the build
-   * persisted. The DataFrame must not escape `action`: its cached
-   * subplans are gone afterwards (lineage still recomputes correctly,
-   * just without the cache). */
+   * write/collect/count), then release everything the build registered:
+   * persisted intermediates are unpersisted, and scratch dirs
+   * ([[graft.queries.Scratch]]) and memory-sink views
+   * ([[graft.queries.StreamRun]]) are dropped. The DataFrame must not
+   * escape `action`: its cached subplans and scratch files are gone
+   * afterwards. */
   def withCached[T](build: => DataFrame)(action: DataFrame => T): T = {
     val outer = collector.get()
-    val buf = new ListBuffer[DataFrame]
+    val buf = new ListBuffer[() => Unit]
     collector.set(buf)
     try {
       val df =
@@ -62,10 +73,13 @@ object Scoped {
     } finally {
       // restore first (idempotent), then release; running in the outer
       // finally means a build that throws MID-WAY (some persistTracked
-      // calls done, pin count() failed) still unpersists what it
-      // registered — the leak this scope exists to prevent
+      // calls done, pin count() failed) still releases what it
+      // registered — the leak this scope exists to prevent. One failed
+      // release must not skip the rest.
       if (outer == null) collector.remove() else collector.set(outer)
-      buf.foreach(_.unpersist(blocking = false))
+      buf.foreach { r =>
+        try r() catch { case scala.util.control.NonFatal(_) => () }
+      }
     }
   }
 }

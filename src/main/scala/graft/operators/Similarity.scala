@@ -387,7 +387,7 @@ object Similarity {
       m: Int = 8,
       ks: Int = 16,
       rerankDepth: Int = 32): DataFrame = {
-    import graft.functions.{PqAdcTable, PqCodes, PqTableDist}
+    import graft.functions.PqCodes
     val nSeedRows = math.max(nSeeds, ks)
     val seedRows: Array[Array[Long]] = candidates
       .filter(col(idCol) < nSeedRows).orderBy(idCol)
@@ -571,11 +571,6 @@ object Similarity {
     }
     pairs.distinct()
   }
-
-  /** Dot of a vector column with a driver-side constant vector via the
-   * codegen'd [[graft.functions.VectorDot]]. */
-  private def dotConst(v: Column, c: Array[Double]): Column =
-    graft.functions.VectorDot(v.cast("array<double>"), typedLit(c))
 
   /**
    * C72: hard-negative mining — for each query, the top-k most-similar

@@ -261,10 +261,7 @@ object CQueries {
     // q_c7b by construction (same seeds/cells/rerank), so both share
     // one oracle; what THIS row proves is the publish→read→probe loop.
     "q_c7d_ann_published" -> ((s, dir) => {
-      val base = s"/tmp/graft_ivfidx_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("ivfidx")
       val e = embs(s, dir).select(col("vec_id"), VF.quantize(col("embedding")).as("qv"))
       val v = Similarity.publishIvfIndex(e, "vec_id", "qv", base, nSeeds = 16)
       val idx = graft.sources.Snapshots.read(s, base, v)
@@ -282,10 +279,7 @@ object CQueries {
     // encode. Output-identical to q_c7c by construction → shared
     // oracle; what THIS row proves is the publish→read→PQ-probe loop.
     "q_c7e_ann_pq_published" -> ((s, dir) => {
-      val base = s"/tmp/graft_ivfpq_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("ivfpq")
       val e = embs(s, dir).select(col("vec_id"), VF.quantize(col("embedding")).as("qv"))
       val v = Similarity.publishIvfIndex(e, "vec_id", "qv", base, nSeeds = 16)
       val idx = graft.sources.Snapshots.read(s, base, v)

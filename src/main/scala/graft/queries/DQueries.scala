@@ -1,24 +1,22 @@
 package graft.queries
 
 import graft.functions.{TextFunctions => TF}
+import graft.queries.StreamRun.{AvailableNow, chunked, feed, source}
 import graft.streaming.{AnnStream, AttrEvent, BudgetDoc, CorpusDoc, CusumEvent, FunnelEvent, KAnonEvent, LogStream, MediaDoc, QueryVec, QuotaEvent, SessionEvent}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 /**
  * D-tier: Structured Streaming topologies executed to completion inside
  * the query builder (Trigger.AvailableNow / chunk-fed MemoryStream +
- * processAllAvailable), with the final result returned as a batch
- * DataFrame — so the SAME DuckDB oracle harness that checks the batch
- * tier hash-checks streaming semantics: event-time windows, bounded-
- * state dedup, and flatMapGroupsWithState timeout sessionization.
+ * processAllAvailable, both through [[StreamRun]]), with the final
+ * result returned as a batch DataFrame — so the SAME DuckDB oracle
+ * harness that checks the batch tier hash-checks streaming semantics:
+ * event-time windows, bounded-state dedup, and flatMapGroupsWithState
+ * timeout sessionization.
  *
  * Determinism notes (what makes a streaming result oracle-checkable):
  *  - q_d1: complete-mode windowed aggregation — final table is the full
@@ -33,15 +31,16 @@ import java.util.concurrent.atomic.AtomicInteger
  *    against the watermark as of the end of batch k, at millisecond
  *    precision).
  *
+ * Small-state streams run with 4 shuffle partitions ([[StreamRun]]):
+ * state-store cost is per partition per micro-batch, and at this state
+ * size it dwarfs the data (q_d2: 32 → 4 partitions ≈ 2x faster).
+ * Streams with no watermark or timeout skip no-data micro-batches.
+ *
  * The memory sink + driver-fed MemoryStream are the verification
  * harness; the production path is the same topology over
  * `readStream.text/parquet` (or Kafka) into [[graft.sources.PartitionedSink]].
  */
 object DQueries {
-
-  private val nameSeq = new AtomicInteger(0)
-  private def mkName(prefix: String): String =
-    s"graft_${prefix}_${nameSeq.incrementAndGet()}"
 
   /** q_d18's NEW-docs frame, shared with its dynamic oracle so the two
    * sides can never drift: exact copies of every 7th base doc
@@ -56,6 +55,19 @@ object DQueries {
         concat(col("text"), lit(" novel marker "), col("doc_id").cast(StringType)))
       .select((col("doc_id") + 300000L).as("doc_id"), col("text2").as("text"))
     copies.union(novel)
+  }
+
+  /** The documents table staged as 4 parquet files (a [[Scratch]]
+   * fixture): the file-stream rows read it one file per micro-batch. */
+  private def docs4(s: SparkSession, dir: String): String =
+    Scratch.fixture(dir, "documents_4files")(
+      s.read.parquet(s"$dir/documents.parquet").repartition(4).write.parquet(_))
+
+  /** A file stream over the [[docs4]] fixture, one file per trigger. */
+  private def docs4Stream(s: SparkSession, dir: String): DataFrame = {
+    val src = docs4(s, dir)
+    s.readStream.schema(s.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
   }
 
   // q_d1 synthesized fields; status formula + SQL mirror shared with the
@@ -74,27 +86,12 @@ object DQueries {
         concat(host, lit(" ["),
           date_format(col("ts"), "dd/MMM/yyyy:HH:mm:ss"), lit(" +0000] "),
           statusCol.cast(StringType)).as("value"))
-      // deterministic per-input path: repeated bench/verify invocations
-      // reuse the already-written copy (the input parquet never changes
-      // within a round), instead of accumulating or rewriting
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d1_" + math.abs(dir.hashCode)).toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS")))
-        lines.coalesce(4).write.mode("overwrite").text(tmp)
+      val tmp = Scratch.fixture(dir, "d1_lines")(lines.coalesce(4).write.text(_))
       val parsed = LogStream.read(s, tmp, "%h %t %>s")
       val agg = LogStream.windowedStatusCounts(parsed,
         watermark = "1 hour", windowLen = "1 hour")
-      val qn = mkName("d1")
-      // windowed-agg state is tiny (720 windows × statuses): run the
-      // state store narrow, q_d2-style, and restore the conf after
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      // windowed-agg state is tiny (720 windows × statuses)
+      StreamRun.toMemory(agg, AvailableNow, "complete", partitions = 4)
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:00").as("hour"),
           col("status"), col("hits"))
         .orderBy("hour", "status")
@@ -107,24 +104,13 @@ object DQueries {
     // table batch-deterministic).
     "q_d11_stream_errorlog" -> ((s, dir) => {
       val lines = Tables.events(s, dir).select(LogQueries.errorLine.as("value"))
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d11_" + math.abs(dir.hashCode)).toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS")))
-        lines.coalesce(4).write.mode("overwrite").text(tmp)
+      val tmp = Scratch.fixture(dir, "d11_lines")(lines.coalesce(4).write.text(_))
       val parsed = LogStream.readError(s, tmp, LogQueries.ErrorLogFmt)
       val agg = parsed
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("loglevel"))
         .agg(count(lit(1)).as("cnt"), sum("pid").as("sum_pid"))
-      val qn = mkName("d11")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      StreamRun.toMemory(agg, AvailableNow, "complete", partitions = 4)
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
           col("loglevel"), col("cnt"), col("sum_pid"))
         .orderBy("hour", "loglevel")
@@ -137,41 +123,23 @@ object DQueries {
     // filtered from the result).
     "q_d2_stream_sessions" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val ev = Tables.events(s, dir)
+      val rows = Tables.events(s, dir)
         .select(col("user_id").cast(StringType).as("clientHost"), col("ts"))
         .as[SessionEvent]
-      val rows = ev.collect() // MemoryStream is driver-fed by definition
+        .collect() // MemoryStream is driver-fed by definition
       val byChunk = rows.groupBy(r =>
         Math.floorDiv(Math.floorDiv(r.ts.getTime, 86400000L), 10L))
-      val mem = MemoryStream[SessionEvent]
+      val mem = source[SessionEvent](s)
       val updates = LogStream.sessionize(mem.toDS(),
         gapSeconds = 1800, watermarkDelay = "0 seconds")
-      val qn = mkName("d2")
-      // state-store partition count = shuffle partitions when the stream
-      // starts; per-micro-batch overhead (one state + delta file per
-      // partition per batch) dwarfs the actual data here, so run the
-      // stream narrow and restore the session conf once it stops
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = updates.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          byChunk.keys.toSeq.sorted.foreach { c =>
-            mem.addData(byChunk(c).toIndexedSeq); q.processAllAvailable()
-          }
-          val maxMs = rows.iterator.map(_.ts.getTime).max
-          // sentinel 1 pushes the watermark past every session's timeout;
-          // sentinel 2's batch then fires those timeouts (data beats
-          // timeout, so a batch with only sentinel data closes the rest)
-          mem.addData(SessionEvent("__sentinel", new Timestamp(maxMs + 10L * 86400000L)))
-          q.processAllAvailable()
-          mem.addData(SessionEvent("__sentinel", new Timestamp(maxMs + 20L * 86400000L)))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      val maxMs = rows.iterator.map(_.ts.getTime).max
+      // sentinel 1 pushes the watermark past every session's timeout;
+      // sentinel 2's batch then fires those timeouts (data beats
+      // timeout, so a batch with only sentinel data closes the rest)
+      val sentinels = Seq(10L, 20L).map(days =>
+        Seq(SessionEvent("__sentinel", new Timestamp(maxMs + days * 86400000L))))
+      val chunks = byChunk.keys.toSeq.sorted.map(c => byChunk(c).toSeq) ++ sentinels
+      StreamRun.toMemory(updates, feed(mem, chunks), partitions = 4)
         .filter(col("closed") && col("clientHost") =!= "__sentinel")
         .select(col("clientHost").as("client"),
           date_format(col("sessionStart"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -179,9 +147,6 @@ object DQueries {
         .orderBy("client", "session_start")
     }),
 
-    // D3: streaming exact dedup over a parquet file stream — bounded
-    // state via dropDuplicatesWithinWatermark; the kept-key set is the
-    // distinct fingerprint set.
     // D4: streaming corpus annotation — the pipeline's map-only
     // annotate stage (language ID + token counting + LEARNED-merge BPE)
     // under micro-batch execution. Stateless append: the post-sink
@@ -204,11 +169,7 @@ object DQueries {
           TF.langIdPadded(col("text"), col("__padded")).as("predicted"),
           TF.tokenCount(col("text")).cast(LongType).as("toks"),
           graft.functions.Bpe.tokenCount(col("text"), codec).cast(LongType).as("bpe_toks"))
-      val qn = mkName("d4")
-      val q = stream.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn)
+      StreamRun.toMemory(stream, AvailableNow)
         .groupBy("source", "predicted")
         .agg(count(lit(1)).as("docs"), sum(col("toks")).as("tokens"),
           sum(col("bpe_toks")).as("bpe_learned"))
@@ -237,15 +198,7 @@ object DQueries {
           CountMin.sketchAgg(CountMin.buckets(col("w"), depth, width), depth, width)
             .as("sk"),
           count(lit(1)).as("n_tokens"))
-      val qn = mkName("d13")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).select(
+      StreamRun.toMemory(agg, AvailableNow, "complete", partitions = 4).select(
         date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
         col("n_tokens"),
         CountMin.estimateCol(col("sk"), lit("scan"), depth, width).as("est_scan"),
@@ -276,14 +229,7 @@ object DQueries {
         .select(col("ts"), bucket)
         .groupBy(window(col("ts"), "10 minutes").as("win"), col("b"))
         .agg(count(lit(1)).as("c"))
-      val qn = mkName("d14")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val hist = StreamRun.toMemory(agg, AvailableNow, "complete", partitions = 4)
       // Finalize without self-joining the memory-sink view (conflicting
       // references under plan dedup): per-window totals via a window
       // function, and the 16-row reference distribution collected to
@@ -298,7 +244,7 @@ object DQueries {
       val rppm = Array.fill[Long](B)(0L)
       refRows.foreach(r => rppm(r.getLong(0).toInt) = r.getLong(1) * 1000000L / nr)
       val overWin = org.apache.spark.sql.expressions.Window.partitionBy("win")
-      s.table(qn)
+      hist
         .withColumn("nw", sum("c").over(overWin))
         .withColumn("rppm", element_at(typedlit(rppm.toSeq), col("b").cast("int") + 1))
         .withColumn("term",
@@ -311,6 +257,9 @@ object DQueries {
         .orderBy("w_start")
     }),
 
+    // D3: streaming exact dedup over a parquet file stream — bounded
+    // state via dropDuplicatesWithinWatermark; the kept-key set is the
+    // distinct fingerprint set.
     "q_d3_stream_dedup" -> ((s, dir) => {
       val sch = s.read.parquet(s"$dir/documents.parquet").schema
       // the file-stream source accepts directories or globs, not a bare
@@ -320,17 +269,8 @@ object DQueries {
           timestamp_micros(lit(1704067200000000L) + col("doc_id") * 1000000L))
       val kept = LogStream.dedupStream(stream, "text", "ts", "30 days",
         keepFingerprintAs = "fp").select(col("fp"))
-      val qn = mkName("d3")
-      // dedup state is one fingerprint per distinct doc: narrow state
-      // store (q_d2 pattern), conf restored after the stream stops
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = kept.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).agg(
+      // dedup state is one fingerprint per distinct doc
+      StreamRun.toMemory(kept, AvailableNow, partitions = 4).agg(
         count(lit(1)).as("kept"),
         min(col("fp")).as("min_fp"),
         max(col("fp")).as("max_fp"))
@@ -348,11 +288,7 @@ object DQueries {
         .withColumn("nk", pmod(col("doc_id"), lit(25)).cast(IntegerType))
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
         .select(col("n_name"), col("n_chars"))
-      val qn = mkName("d6")
-      val q = joined.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn)
+      StreamRun.toMemory(joined, AvailableNow)
         .groupBy("n_name")
         .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))
         .orderBy("n_name")
@@ -365,23 +301,12 @@ object DQueries {
     // computed from the files READ BACK off the sink, so the oracle
     // checks the whole write→discover→prune→read loop.
     "q_d7_stream_sink" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d7_" + dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-      val src = s"$base/src"
-      val out = s"$base/out"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(src, "_SUCCESS")))
-        s.read.parquet(s"$dir/documents.parquet").repartition(4).write
-          .mode("overwrite").parquet(src)
-      // stale batch dirs from older runs would pollute read-back
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val sch = s.read.parquet(src).schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
+      val out = Scratch.dir("d7_sink")
+      val stream = docs4Stream(s, dir)
         .withColumn("ts",
           timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(7)) * 86400L))
-      val q = graft.sources.PartitionedSink.streamWriterByDate(stream, out, "ts")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamRun.run(s, AvailableNow)(_ =>
+        graft.sources.PartitionedSink.streamWriterByDate(stream, out, "ts"))
       graft.sources.PartitionedSink.read(s, out)
         .groupBy(col("p_date").cast(StringType).as("day"))
         .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"),
@@ -398,29 +323,13 @@ object DQueries {
     // latest-version VERIFIED read must equal the batch publish of the
     // same data (per-source doc+token rollup, version pinned to 2).
     "q_d33_stream_publish" -> ((s, dir) => {
-      val base0 = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d33_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-      val src = s"$base0/src"
-      val snap = s"$base0/snap"
-      val ckpt = s"$base0/ckpt"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(src, "_SUCCESS")))
-        s.read.parquet(s"$dir/documents.parquet").repartition(4).write
-          .mode("overwrite").parquet(src)
-      // a rerun in the same JVM must re-ingest from scratch: stale
-      // checkpoint offsets would see no new files and publish nothing
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(snap))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      val sch = s.read.parquet(src).schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
+      val snap = Scratch.dir("d33_snap")
+      val stream = docs4Stream(s, dir)
         .select(col("doc_id"), col("source"),
           TF.tokenCount(col("text")).cast(LongType).as("tokens"))
-      val q = graft.sources.Snapshots.publishStream(stream, snap, ckpt,
-          everyBatches = 2, statsCols = Seq("source"),
-          sumCols = Seq("tokens"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamRun.run(s, AvailableNow)(ckpt =>
+        graft.sources.Snapshots.publishStream(stream, snap, ckpt,
+          everyBatches = 2, statsCols = Seq("source"), sumCols = Seq("tokens")))
       graft.sources.Snapshots.read(s, snap, verify = true)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("tokens").as("tokens"))
@@ -439,27 +348,14 @@ object DQueries {
     // contract.
     "q_d34_stream_wet" -> ((s, dir) => {
       import graft.functions.{HtmlExtract, PayloadDecode, WarcRecords}
-      val base0 = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d34_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-      val src = s"$base0/src"
-      val out = s"$base0/wet"
-      val ckpt = s"$base0/ckpt"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(src, "_SUCCESS")))
-        s.read.parquet(s"$dir/documents.parquet").repartition(4).write
-          .mode("overwrite").parquet(src)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      val sch = s.read.parquet(src).schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
+      val out = Scratch.dir("d34_wet")
       // one staged file per micro-batch = ONE input split at tier
       // scale, and writeMembers writes one member per partition — an
       // unrepartitioned batch gzips 1.5M records in a single task
       // (x100 read 37.5 s; the r9 single-task class). Spread the
       // member write across the executors; member count per batch =
       // partitions, the shape a real exporter wants anyway.
-      val wet = stream
+      val wet = docs4Stream(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(PipeQueries.syntheticWarc(col("doc_id"), col("text"))
           .cast(BinaryType).as("w"))
@@ -468,10 +364,8 @@ object DQueries {
           col("r.record_id"), col("r.warc_date"),
           HtmlExtract(PayloadDecode(col("r.payload_bytes"),
             col("r.http_content_type"))).getField("main_text")).as("rec"))
-      val q = graft.sources.Warc.streamMemberWriter(wet, "rec", out, "wet")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamRun.run(s, AvailableNow)(_ =>
+        graft.sources.Warc.streamMemberWriter(wet, "rec", out, "wet"))
       graft.sources.Warc.read(s, out)
         .filter(col("warc_type") === "conversion")
         .select(substring_index(col("target_uri"), "/", -1)
@@ -488,27 +382,13 @@ object DQueries {
     // version pins to 5 analytically. Tags make every epoch
     // replay-idempotent (spec-pinned).
     "q_d35_stream_delta" -> ((s, dir) => {
-      val base0 = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d35_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-      val src = s"$base0/src"
-      val snap = s"$base0/snap"
-      val ckpt = s"$base0/ckpt"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(src, "_SUCCESS")))
-        s.read.parquet(s"$dir/documents.parquet").repartition(4).write
-          .mode("overwrite").parquet(src)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(snap))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      val sch = s.read.parquet(src).schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
+      val snap = Scratch.dir("d35_snap")
+      val stream = docs4Stream(s, dir)
         .select(col("doc_id"), col("source"),
           TF.tokenCount(col("text")).cast(LongType).as("tokens"))
-      val q = graft.sources.Snapshots.publishStreamDelta(stream, snap, ckpt,
-          compactEvery = 4, statsCols = Seq("source"),
-          sumCols = Seq("tokens"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamRun.run(s, AvailableNow)(ckpt =>
+        graft.sources.Snapshots.publishStreamDelta(stream, snap, ckpt,
+          compactEvery = 4, statsCols = Seq("source"), sumCols = Seq("tokens")))
       graft.sources.Snapshots.readAt(s, snap, verify = true)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("tokens").as("tokens"))
@@ -529,13 +409,7 @@ object DQueries {
     // min-ord ownership, so the oracle is q_c128's replay verbatim.
     "q_d36_stream_archive" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val base0 = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_d36_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-      val out = s"$base0/arc"
-      val ckpt = s"$base0/ckpt"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base0))
+      val out = Scratch.dir("d36_arc")
       val d = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val rows = d.select(col("doc_id").as("ord"), col("doc_id").as("did"),
@@ -546,8 +420,7 @@ object DQueries {
         .collect().map(r => (r.getLong(0), r.getLong(1),
           Option(r.getString(2)).orNull))
         .sortBy(_._1)
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[(Long, Long, String)]
+      val mem = source[(Long, Long, String)](s)
       val fetches = mem.toDF().toDF("ord", "did", "text")
         .select(
           concat(lit("http://example.com/doc/"),
@@ -561,18 +434,8 @@ object DQueries {
           col("text").cast(BinaryType).as("payload"), col("ord"))
       val recs = LogStream.archiveDedupStream(fetches, "url", "rid",
         "fdate", "status", "mime", "payload", "ord")
-      // small-state stream: state-store cost is per partition per
-      // micro-batch — single-digit partitions, restored after stop()
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.sources.Warc.streamMemberWriter(
-            recs.select(col("rec")), "rec", out, "arc")
-          .option("checkpointLocation", ckpt).start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      StreamRun.run(s, feed(mem, chunked(rows, 4)), partitions = 4)(_ =>
+        graft.sources.Warc.streamMemberWriter(recs.select(col("rec")), "rec", out, "arc"))
       val back = graft.sources.Warc.read(s, out)
         .select(substring_index(col("target_uri"), "/", -1)
             .cast(LongType).as("doc_id"),
@@ -599,7 +462,6 @@ object DQueries {
     // exactly once and the final set equals the batch join (the oracle).
     "q_d5_stream_join" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
@@ -612,32 +474,19 @@ object DQueries {
       def side(rows: Array[org.apache.spark.sql.Row], ty: String): Seq[AttrEvent] =
         rows.iterator.filter(_.getString(3) == ty)
           .map(r => AttrEvent(r.getLong(0), r.getLong(1), r.getTimestamp(2))).toSeq
-      val clicks = MemoryStream[AttrEvent]
-      val purchases = MemoryStream[AttrEvent]
+      val clicks = source[AttrEvent](s)
+      val purchases = source[AttrEvent](s)
       val joined = LogStream.attributionJoin(clicks.toDF(), purchases.toDF(), 3600L)
-      val qn = mkName("d5")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
+      val lockstep = byChunk.keys.toSeq.sorted.map(ck => () => {
+        clicks.addData(side(byChunk(ck), "click"))
+        purchases.addData(side(byChunk(ck), "purchase"))
+        ()
+      })
       // inner-join append emits pairs on data batches; the no-data batches
       // only evict state (a timeout/window-emit concern, not a join one),
       // so skipping them halves the per-chunk state-store commits
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = joined.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          byChunk.keys.toSeq.sorted.foreach { ck =>
-            clicks.addData(side(byChunk(ck), "click"))
-            purchases.addData(side(byChunk(ck), "purchase"))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      StreamRun.toMemory(joined, StreamRun.Fed(lockstep), partitions = 2,
+          noDataBatches = false)
         .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
         .orderBy("purchase_id", "click_id")
     }),
@@ -647,10 +496,9 @@ object DQueries {
     // (ms-floored ts, id) chunks, so the admitted set is exactly the
     // batch per-key top-N the oracle ranks directly; no watermark or
     // timeout exists, so no-data micro-batches have nothing to do and
-    // are skipped (conf restored).
+    // are skipped.
     "q_d8_stream_quota" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = Tables.events(s, dir)
         .select(
           concat(lit("u"), pmod(col("user_id"), lit(50L)).cast(StringType)).as("key"),
@@ -658,35 +506,14 @@ object DQueries {
         .collect() // MemoryStream is driver-fed by definition
         .map(r => QuotaEvent(r.getString(0), r.getLong(1), r.getTimestamp(2)))
         .sortBy(e => (e.ts.getTime, e.id))
-      val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
-      val mem = MemoryStream[QuotaEvent]
+      val mem = source[QuotaEvent](s)
       val admitted = LogStream.quotaStream(mem.toDS(), maxPerKey = 20)
-      val qn = mkName("d8")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      StreamRun.toMemory(admitted, feed(mem, chunked(rows, 5)), partitions = 4,
+          noDataBatches = false)
         .select(col("key"), col("id").as("event_id"), col("quota_rank"))
         .orderBy("key", "quota_rank")
     }),
 
-    // D12: streaming per-source TOKEN-budget admission (the metered D8,
-    // ingest-shaping for a training mix): token counts computed inside
-    // the micro-batch plan, one long of state per source. Fed in
-    // globally doc_id-sorted chunks, so the admitted set equals the
-    // batch per-source greedy cumulative-sum cut the oracle replays; no
-    // watermark/timeout exists, so no-data micro-batches are skipped.
     // D17: streaming semantic decontamination — the C76 filter on the
     // ingest path: benchmark vectors are driver state compiled into
     // codegen dots, the stream is filtered STATELESSLY per micro-batch
@@ -703,11 +530,7 @@ object DQueries {
       val kept = graft.operators.Similarity
         .semanticDecontaminate(stream, bench, "qv", tau = 0.98)
         .select("vec_id", "label")
-      val qn = mkName("d17")
-      val q = kept.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn).groupBy("label")
+      StreamRun.toMemory(kept, AvailableNow).groupBy("label")
         .agg(count(lit(1)).as("survivors"), sum("vec_id").as("sum_ids"))
         .orderBy("label")
     }),
@@ -726,11 +549,8 @@ object DQueries {
       val sch = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(sch).parquet(s"$dir/documents.*")
       val scored = LogStream.scoreStream(stream, "doc_id", "text", w, b)
-      val qn = mkName("d16")
-      val q = scored.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn).select("doc_id", "margin", "admit").orderBy("doc_id")
+      StreamRun.toMemory(scored, AvailableNow)
+        .select("doc_id", "margin", "admit").orderBy("doc_id")
     }),
 
     // D15: streaming per-source bottom-k content sample — the
@@ -741,66 +561,40 @@ object DQueries {
     // the oracle computes directly.
     "q_d15_stream_sample" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("source"), col("doc_id"), col("text"))
         .collect() // MemoryStream is driver-fed by definition
         .map(r => graft.streaming.SampleDoc(r.getString(0), r.getLong(1), r.getString(2)))
         .sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
-      val mem = MemoryStream[graft.streaming.SampleDoc]
+      val mem = source[graft.streaming.SampleDoc](s)
       val admitted = LogStream.sampleStream(mem.toDS(), k = 32)
-      val qn = mkName("d15")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("h"), col("doc_id"))
-      s.table(qn)
+      StreamRun.toMemory(admitted, feed(mem, chunked(rows, 5)), partitions = 4,
+          noDataBatches = false)
         .withColumn("rank", row_number().over(w).cast(LongType))
         .filter(col("rank") <= 32)
         .select("source", "rank", "doc_id", "h")
         .orderBy("source", "rank")
     }),
 
+    // D12: streaming per-source TOKEN-budget admission (the metered D8,
+    // ingest-shaping for a training mix): token counts computed inside
+    // the micro-batch plan, one long of state per source. Fed in
+    // globally doc_id-sorted chunks, so the admitted set equals the
+    // batch per-source greedy cumulative-sum cut the oracle replays; no
+    // watermark/timeout exists, so no-data micro-batches are skipped.
     "q_d12_stream_budget" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("source"), col("doc_id"), col("text"))
         .collect() // MemoryStream is driver-fed by definition
         .map(r => BudgetDoc(r.getString(0), r.getLong(1), r.getString(2)))
         .sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
-      val mem = MemoryStream[BudgetDoc]
+      val mem = source[BudgetDoc](s)
       val admitted = LogStream.budgetStream(mem.toDS(), budgetTokens = 2000L)
-      val qn = mkName("d12")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      StreamRun.toMemory(admitted, feed(mem, chunked(rows, 5)), partitions = 4,
+          noDataBatches = false)
         .select(col("source"), col("doc_id"), col("ntok"), col("cum_tokens"))
         .orderBy("source", "doc_id")
     }),
@@ -814,37 +608,15 @@ object DQueries {
     // signatures pinned from the independent HOF simhash formulation.
     "q_d9_stream_neardup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val base = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
       val planted = base.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       val rows = base.union(planted).collect()
         .map(r => CorpusDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.nearDupStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d9")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
-        .groupBy("doc_id")
-        .agg(min("owner").as("owner"))
-        .select(col("doc_id"),
-          (col("owner") < col("doc_id")).cast(IntegerType).as("dropped"),
-          col("owner"))
-        .orderBy("doc_id")
+      minOwners(StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 4)),
+        partitions = 4, noDataBatches = false))
     }),
 
     // D21: streaming perceptual image near-dedup — synthetic edge PNGs
@@ -854,35 +626,14 @@ object DQueries {
     // STATIC: the analytic hash + an unbanded band replay.
     "q_d21_stream_image_dedup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val imgs = graft.operators.Multimodal.withSyntheticEdgePng(
         s.read.parquet(s"$dir/documents.parquet").select("doc_id"), "doc_id")
       val rows = imgs.collect()
         .map(r => MediaDoc(r.getLong(0), r.getAs[Array[Byte]](1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[MediaDoc]
+      val mem = source[MediaDoc](s)
       val verdicts = LogStream.imageNearDupStream(mem.toDF(), "doc_id", "img")
-      val qn = mkName("d21")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
-        .groupBy("doc_id")
-        .agg(min("owner").as("owner"))
-        .select(col("doc_id"),
-          (col("owner") < col("doc_id")).cast(IntegerType).as("dropped"),
-          col("owner"))
-        .orderBy("doc_id")
+      minOwners(StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 4)),
+        partitions = 4, noDataBatches = false))
     }),
 
     // D18: WARM-START streaming near-dedup — the old corpus (the whole
@@ -894,35 +645,13 @@ object DQueries {
     // over pinned signatures with old∪new bucket-mate minima.
     "q_d18_stream_warm_dedup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val base = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
       val rows = d18NewDocs(base).collect()
         .map(r => CorpusDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.nearDupStreamWarm(mem.toDF(), base, "doc_id", "text")
-      val qn = mkName("d18")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
-        .groupBy("doc_id")
-        .agg(min("owner").as("owner"))
-        .select(col("doc_id"),
-          (col("owner") < col("doc_id")).cast(IntegerType).as("dropped"),
-          col("owner"))
-        .orderBy("doc_id")
+      minOwners(StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 4)),
+        partitions = 4, noDataBatches = false))
     }),
 
     // D19: streaming repetition firewall — the C79 gates as a
@@ -932,7 +661,6 @@ object DQueries {
     // evidence ppms and hash-match the batch SQL replication.
     "q_d19_stream_repetition" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("text2",
           when(col("doc_id") % 9 === 0,
@@ -940,16 +668,9 @@ object DQueries {
             .otherwise(col("text")))
         .select(col("doc_id"), col("text2").as("text")).collect()
         .map(r => CorpusDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.repetitionGateStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d19")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 3))).orderBy("doc_id")
     }),
 
     // D26: streaming encoding firewall — the C103 gate at the ingest
@@ -958,7 +679,6 @@ object DQueries {
     // verdicts with repair evidence, hash-checked by the batch replay.
     "q_d26_stream_encoding" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       import graft.functions.EncodingQa
       // plant on ASCII-sanitized base text for the mojibake slice —
       // same guard and rationale as q_c103 (r13 advisor finding)
@@ -971,16 +691,9 @@ object DQueries {
             .otherwise(col("text")))
         .select(col("doc_id"), col("text2").as("text")).collect()
         .map(r => CorpusDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.encodingGateStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d26")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 3))).orderBy("doc_id")
     }),
 
     // D27: streaming ingest of a hive-partitioned log tree (the A14
@@ -989,22 +702,11 @@ object DQueries {
     // a partition filter drops shard s3, and the per-shard rollup
     // hash-matches the q_log_hive_partitions oracle.
     "q_d27_stream_hive" -> ((s, dir) => {
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_hived_" + math.abs(dir.hashCode)).toString
-      if (!Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        Tables.events(s, dir)
-          .select(LogQueries.commonLine.as("value"),
-            concat(lit("s"), (col("event_id") % 4).cast(StringType)).as("shard"))
-          .coalesce(1).write.mode("overwrite").partitionBy("shard").text(tmp)
-      }
+      val tmp = LogQueries.hiveLogs(s, dir)
       val parsed = LogStream.readPartitioned(
           s, tmp, tmp + "/shard=*/*.txt", graft.logs.HttpdLog.CommonFormat)
         .filter(col("shard") =!= "s3")
-      val qn = mkName("d27")
-      val q = parsed.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      StreamRun.toMemory(parsed, AvailableNow)
         .groupBy("shard")
         .agg(
           count(lit(1)).as("cnt"),
@@ -1020,23 +722,15 @@ object DQueries {
     // verdicts hash-match the IDENTICAL q_c109 oracle.
     "q_d28_stream_html" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           PipeQueries.syntheticHtml(col("doc_id"), col("text")).as("html"))
         .collect().map(r => CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.htmlExtractStream(
         mem.toDF().toDF("doc_id", "html"))
-      val qn = mkName("d28")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 3))).orderBy("doc_id")
     }),
 
     // D30: streaming training-example builder — documents arrive in
@@ -1044,21 +738,13 @@ object DQueries {
     // rollup hash-matches the IDENTICAL q_c116 batch oracle.
     "q_d30_stream_examples" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
         .collect().map(r => CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val out = LogStream.exampleStream(mem.toDF())
-      val qn = mkName("d30")
-      val q = out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      StreamRun.toMemory(out, feed(mem, chunked(rows, 3))).orderBy("doc_id")
     }),
 
     // D29: streaming WARC ingest — the C111 synthetic segments
@@ -1067,7 +753,6 @@ object DQueries {
     // per-doc rollup hash-matches the IDENTICAL q_c111 oracle.
     "q_d29_stream_warc" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       import graft.functions.HtmlExtract
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
@@ -1075,16 +760,9 @@ object DQueries {
             .cast(BinaryType).as("w"))
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
         .sortBy(_._1)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[(Long, Array[Byte])]
+      val mem = source[(Long, Array[Byte])](s)
       val recs = LogStream.warcStream(mem.toDF().toDF("doc_id", "warc"))
-      val qn = mkName("d29")
-      val q = recs.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).groupBy("doc_id")
+      StreamRun.toMemory(recs, feed(mem, chunked(rows, 3))).groupBy("doc_id")
         .agg(
           count(lit(1)).cast(IntegerType).as("n_records"),
           max(when(col("warc_type") === "response", col("warc_type")))
@@ -1111,36 +789,17 @@ object DQueries {
     // to streamed ids.
     "q_d31_stream_exact_substr" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val d = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text")
-      val idsS = col("doc_id").cast(StringType)
-      val streamDocs = d.select(
-        (col("doc_id") + 10000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .when(col("doc_id") % 3 === 1, concat(col("text"),
-            lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
-          .otherwise(concat(lit("wholly fresh streamed document ufresh"),
-            idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
-            lit(" xfresh"), idsS))
-          .as("text"))
+      val streamDocs = freshVariants(d)
       val rows = streamDocs.collect()
         .map(r => graft.streaming.CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.exactSubstrStream(mem.toDF(), d)
-      val qn = mkName("d31")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = verdicts.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      val starts = s.table(qn).groupBy("doc_id")
+      val starts = StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 3)),
+          partitions = 4)
+        .groupBy("doc_id")
         .agg(sort_array(collect_list(col("pos"))).as("__starts"))
       streamDocs
         .select(col("doc_id"), TF.tokens(col("text")).as("__t"))
@@ -1165,36 +824,16 @@ object DQueries {
     // candidate ids.
     "q_d32_stream_leak_gate" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val d = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text")
-      val idsS = col("doc_id").cast(StringType)
-      val cands = d.select(
-        (col("doc_id") + 10000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .when(col("doc_id") % 3 === 1, concat(col("text"),
-            lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
-          .otherwise(concat(lit("wholly fresh streamed document ufresh"),
-            idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
-            lit(" xfresh"), idsS))
-          .as("text"))
+      val cands = freshVariants(d)
       val rows = cands.collect()
         .map(r => graft.streaming.CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(-_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val hits = LogStream.leakageGateStream(mem.toDF(), d)
-      val qn = mkName("d32")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = hits.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      val agg = s.table(qn).groupBy("doc_id")
+      val agg = StreamRun.toMemory(hits, feed(mem, chunked(rows, 3)), partitions = 4)
+        .groupBy("doc_id")
         .agg(countDistinct(col("band")).as("nh"))
       cands.select("doc_id").join(agg, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1210,26 +849,14 @@ object DQueries {
     // and is checked by the IDENTICAL oracle SQL.
     "q_d23_stream_funnel" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = Tables.events(s, dir)
         .select("user_id", "ts", "event_id", "event_type").collect()
         .map(r => FunnelEvent(r.getLong(0), r.getTimestamp(1), r.getLong(2),
           r.getString(3)))
         .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[FunnelEvent]
+      val mem = source[FunnelEvent](s)
       val transitions = LogStream.funnelStream(mem.toDS())
-      val qn = mkName("d23")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = transitions.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      StreamRun.toMemory(transitions, feed(mem, chunked(rows, 4)), partitions = 4)
         .groupBy("user_id").agg(max("stage").as("st"))
         .agg(
           count(lit(1)).as("users"),
@@ -1250,27 +877,16 @@ object DQueries {
     // windows — see LogStream.cusumStream).
     "q_d24_stream_cusum" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select(col("source"), col("doc_id"),
           timestamp_micros(lit(1704067200000000L) + col("doc_id") * 1000000L)
             .as("ts"),
           TF.tokenCount(col("text")).cast(LongType).as("x"))
         .as[CusumEvent].collect().sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
-      val mem = MemoryStream[CusumEvent]
+      val mem = source[CusumEvent](s)
       val pts = LogStream.cusumStream(mem.toDS(), kUp = 60L, kDn = 45L, h = 120L)
-      val qn = mkName("d24")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = pts.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).orderBy("source", "doc_id")
+      StreamRun.toMemory(pts, feed(mem, chunked(rows, 5)), partitions = 4)
+        .orderBy("source", "doc_id")
     }),
 
     // D25: streaming k-anonymity release gate — C85's finest QI level
@@ -1281,7 +897,6 @@ object DQueries {
     // ≥ k, seq = arrival rank). Fed in 5 event-time-ordered chunks.
     "q_d25_stream_kanon" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = Tables.events(s, dir)
         .select(
           concat(col("event_type"), lit("|"),
@@ -1290,20 +905,10 @@ object DQueries {
           col("event_id"), col("ts"))
         .as[KAnonEvent].collect()
         .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-      val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
-      val mem = MemoryStream[KAnonEvent]
+      val mem = source[KAnonEvent](s)
       val released = LogStream.kAnonStream(mem.toDS(), k = 10)
-      val qn = mkName("d25")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = released.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).orderBy("key", "seq")
+      StreamRun.toMemory(released, feed(mem, chunked(rows, 5)), partitions = 4)
+        .orderBy("key", "seq")
     }),
 
     // D22: streaming blocklist firewall — the C88 automaton as a
@@ -1313,28 +918,15 @@ object DQueries {
     // length(replace()) replay. Docs fed in 3 chunks.
     "q_d22_stream_blocklist" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text").collect()
         .map(r => CorpusDoc(r.getLong(0), r.getString(1))).sortBy(_.doc_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-      val mem = MemoryStream[CorpusDoc]
+      val mem = source[CorpusDoc](s)
       val verdicts = LogStream.blocklistStream(
         mem.toDF(), PipeQueries.blocklistPats)
-      val qn = mkName("d22")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      StreamRun.toMemory(verdicts, feed(mem, chunked(rows, 3))).orderBy("doc_id")
     }),
 
-    // D10: online ANN serving — query vectors STREAM against the static
-    // corpus through the same seeded-IVF plan as q_c7b; results must
-    // hash-match q_c7b's OWN oracle (batch/stream parity for the whole
-    // similarity-search path). Queries fed in two chunks to prove
-    // multi-batch serving.
     // D20: streaming IVF growth monitor — every vector routes to its
     // seeded cell; one long of state per cell emits a power-of-two
     // population-crossing ledger. Chunks are fed vec_id-sorted, so the
@@ -1343,64 +935,66 @@ object DQueries {
     // over the batch assignment, rows where rn is a power of two).
     "q_d20_stream_ivf_growth" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val corpus = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), graft.functions.VectorFunctions.quantize(col("embedding")).as("qv"))
       val rows = corpus.collect()
         .map(r => QueryVec(r.getLong(0), r.getSeq[Long](1))).sortBy(_.vec_id)
-      val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
-      val mem = MemoryStream[QueryVec]
+      val mem = source[QueryVec](s)
       val events = AnnStream.ivfGrowthMonitor(mem.toDF(), corpus, "vec_id", "qv", nSeeds = 16)
-      val qn = mkName("d20")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = events.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn).orderBy("cell", "level")
+      StreamRun.toMemory(events, feed(mem, chunked(rows, 4)), partitions = 4,
+          noDataBatches = false)
+        .orderBy("cell", "level")
     }),
 
+    // D10: online ANN serving — query vectors STREAM against the static
+    // corpus through the same seeded-IVF plan as q_c7b; results must
+    // hash-match q_c7b's OWN oracle (batch/stream parity for the whole
+    // similarity-search path). Queries fed in two chunks (3 + 2) to
+    // prove multi-batch serving.
     "q_d10_stream_ann" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val corpus = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), graft.functions.VectorFunctions.quantize(col("embedding")).as("qv"))
       val qRows = corpus.filter(col("vec_id") < 5).collect()
         .map(r => QueryVec(r.getLong(0), r.getSeq[Long](1))).sortBy(_.vec_id)
-      val mem = MemoryStream[QueryVec]
+      val mem = source[QueryVec](s)
       val served = AnnStream.ivfServe(mem.toDF(), corpus, "vec_id", "qv",
         k = 5, nSeeds = 16, probes = 2)
-      val qn = mkName("d10")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = served.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          Seq(qRows.take(3), qRows.drop(3)).foreach { c =>
-            mem.addData(c.toIndexedSeq); q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      StreamRun.toMemory(served, feed(mem, chunked(qRows, 2)), partitions = 4,
+          noDataBatches = false)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")
     })
   )
+
+  /** Per-doc verdict of the min-owner near-dup streams (D9/D18/D21):
+   * a doc is dropped iff some band bucket's owner is a smaller id. */
+  private def minOwners(verdicts: DataFrame): DataFrame =
+    verdicts
+      .groupBy("doc_id")
+      .agg(min("owner").as("owner"))
+      .select(col("doc_id"),
+        (col("owner") < col("doc_id")).cast(IntegerType).as("dropped"),
+        col("owner"))
+      .orderBy("doc_id")
+
+  /** The D31/D32 streamed documents (ids corpus + 10M): 1-in-3 exact
+   * corpus copies, 1-in-3 shared text + fresh tails, 1-in-3 wholly
+   * fresh — the `su` CTE of both oracles. */
+  private def freshVariants(d: DataFrame): DataFrame = {
+    val idsS = col("doc_id").cast(StringType)
+    d.select(
+      (col("doc_id") + 10000000L).as("doc_id"),
+      when(col("doc_id") % 3 === 0, col("text"))
+        .when(col("doc_id") % 3 === 1, concat(col("text"),
+          lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
+        .otherwise(concat(lit("wholly fresh streamed document ufresh"),
+          idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
+          lit(" xfresh"), idsS))
+        .as("text"))
+  }
+
 
   val oracleSql: Map[String, String] = Map(
     // D31: batch ExactSubstr arithmetic (the q_c114 chain) over

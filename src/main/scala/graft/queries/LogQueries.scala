@@ -27,6 +27,16 @@ object LogQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
 
+  /** The synthesized common-format log as a hive-partitioned tree
+   * (shard=s0..s3, a [[Scratch]] fixture) — the input of both
+   * q_log_hive_partitions and its streaming twin q_d27. */
+  private[queries] def hiveLogs(s: SparkSession, dir: String): String =
+    Scratch.fixture(dir, "hive_logs")(
+      events(s, dir)
+        .select(commonLine.as("value"),
+          concat(lit("s"), (col("event_id") % 4).cast(StringType)).as("shard"))
+        .coalesce(1).write.partitionBy("shard").text(_))
+
   // ---- shared synthesized fields (Spark side; oracle mirrors in SQL) ----
 
   private[queries] def host: Column =
@@ -135,24 +145,17 @@ object LogQueries {
     // A7+A9: format auto-detect over a glob of mixed plain + gzip files,
     // with per-file attribution via log_file
     "q_log_autodetect_glob" -> ((s, dir) => {
-      // deterministic per-input path, written once per round (the input
-      // parquet never changes; no temp-dir buildup or rewrites). bz2 is
-      // the newest dir: its _SUCCESS gates regeneration of ALL three so
-      // a cache from the older 2-way split can't survive. zstd is NOT
+      // staged once per dataset (a Scratch fixture). zstd is NOT
       // covered — Spark's text source needs the native Hadoop zstd lib,
       // absent here; gzip/bzip2/deflate ship as Java codecs.
-      val tmp = Paths.get(sys.props("java.io.tmpdir"),
-        "graft_glob_" + math.abs(dir.hashCode)).toString
       val ev = events(s, dir)
-      if (!java.nio.file.Files.exists(Paths.get(s"$tmp/bz2", "_SUCCESS"))) {
+      val tmp = Scratch.fixture(dir, "glob_logs") { out =>
         ev.filter(col("event_id") % 3 === 0).select(commonLine.as("value"))
-          .coalesce(2).write.mode("overwrite").text(s"$tmp/plain")
+          .coalesce(2).write.text(s"$out/plain")
         ev.filter(col("event_id") % 3 === 1).select(commonLine.as("value"))
-          .coalesce(2).write.mode("overwrite").option("compression", "gzip")
-          .text(s"$tmp/gz")
+          .coalesce(2).write.option("compression", "gzip").text(s"$out/gz")
         ev.filter(col("event_id") % 3 === 2).select(commonLine.as("value"))
-          .coalesce(2).write.mode("overwrite").option("compression", "bzip2")
-          .text(s"$tmp/bz2")
+          .coalesce(2).write.option("compression", "bzip2").text(s"$out/bz2")
       }
       // no format given -> sampled auto-detection must land on 'common'
       HttpdLog.read(s, s"$tmp/*/*")
@@ -175,15 +178,7 @@ object LogQueries {
     // partitions before the scan (HivePartitionSpec pins the
     // PartitionFilters plan shape; this row pins the VALUES).
     "q_log_hive_partitions" -> ((s, dir) => {
-      val tmp = Paths.get(sys.props("java.io.tmpdir"),
-        "graft_hive_" + math.abs(dir.hashCode)).toString
-      if (!java.nio.file.Files.exists(Paths.get(tmp, "_SUCCESS"))) {
-        events(s, dir)
-          .select(commonLine.as("value"),
-            concat(lit("s"), (col("event_id") % 4).cast(StringType)).as("shard"))
-          .coalesce(1).write.mode("overwrite").partitionBy("shard").text(tmp)
-      }
-      HttpdLog.read(s, tmp, formatType = "common")
+      HttpdLog.read(s, hiveLogs(s, dir), formatType = "common")
         .filter(col("shard") =!= "s3") // partition-pruning predicate
         .groupBy("shard")
         .agg(
@@ -306,23 +301,16 @@ object LogQueries {
     // reference's octet_length(line)+1 accounting, and the oracle
     // reconstructs the raw line analytically to re-derive the lengths.
     "q_log_scan_stats" -> ((s, dir) => {
-      // cache key = SOURCE CONTENT fingerprint (length + mtime of the
-      // events parquet), not the path string: regenerated testdata at
-      // the same path must not reuse stale synthesized lines (r12
-      // review finding — a path-hash key silently decoupled the scan
-      // from the oracle's analytic reconstruction)
-      val src = new java.io.File(s"$dir/events.parquet")
-      val tmp = Paths.get(sys.props("java.io.tmpdir"),
-        "graft_scanstats_" + java.lang.Long.toHexString(src.length()) +
-          "_" + java.lang.Long.toHexString(src.lastModified()) +
-          "_" + Integer.toHexString(dir.hashCode)).toString
-      if (!java.nio.file.Files.exists(Paths.get(tmp, "_SUCCESS"))) {
-        val line = when(col("event_id") % 10 === 0,
-          concat(lit("garbage line "), col("event_id").cast(StringType)))
-          .otherwise(commonLine)
-        events(s, dir).select(line.as("value"))
-          .coalesce(2).write.mode("overwrite").text(tmp)
-      }
+      // the fixture's dataset stamp (file sizes + mtimes) keeps
+      // regenerated testdata at the same path from reusing stale
+      // synthesized lines (r12 review finding — a path-hash key
+      // silently decoupled the scan from the oracle's analytic
+      // reconstruction)
+      val line = when(col("event_id") % 10 === 0,
+        concat(lit("garbage line "), col("event_id").cast(StringType)))
+        .otherwise(commonLine)
+      val tmp = Scratch.fixture(dir, "scanstats_lines")(
+        events(s, dir).select(line.as("value")).coalesce(2).write.text(_))
       HttpdLog.scanStats(s, s"$tmp/part-*", formatType = "common")
         .agg(
           countDistinct(col("log_file")).as("files"),
@@ -346,7 +334,7 @@ object LogQueries {
 
     // A10: httpd.conf extraction
     "q_conf_formats" -> ((s, dir) => {
-      val conf = Paths.get(sys.props("java.io.tmpdir"), "graft_conf_oracle.conf")
+      val conf = Paths.get(Scratch.dir("conf"), "oracle.conf")
       Files.write(conf, Seq(
         "# test config",
         "LogFormat \"%h %l %u %t \\\"%r\\\" %>s %b\" common",
@@ -363,7 +351,7 @@ object LogQueries {
     // SQL surface: read_httpd_log as a table-valued function
     "q_sql_tvf" -> ((s, dir) => {
       GraftSql.register(s)
-      val log = Paths.get(sys.props("java.io.tmpdir"), "graft_tvf.log")
+      val log = Paths.get(Scratch.dir("tvf"), "tvf.log")
       val lines = (0 until 40).map { i =>
         val status = if (i % 2 == 0) 200 else 404
         f"10.1.0.$i - - [02/Feb/2024:08:$i%02d:00 +0000] " + "\"GET /t HTTP/1.1\" " + s"$status $i"
@@ -376,9 +364,9 @@ object LogQueries {
 
     // A10: conf= + format_type=nickname integration into HttpdLog.read
     "q_log_conf_integration" -> ((s, dir) => {
-      val tmp = Paths.get(sys.props("java.io.tmpdir"))
-      val conf = tmp.resolve("graft_integ.conf")
-      val log = tmp.resolve("graft_integ.log")
+      val tmp = Paths.get(Scratch.dir("integ"))
+      val conf = tmp.resolve("integ.conf")
+      val log = tmp.resolve("integ.log")
       Files.write(conf, Seq(
         "LogFormat \"%h %l %u %t \\\"%r\\\" %>s %b\" common",
         "LogFormat \"%h %t \\\"%r\\\" %>s %b\" mini"
@@ -400,7 +388,7 @@ object LogQueries {
     // over lines synthesized from events; the aggregate proves level,
     // module, pid, client, message, and the µs timestamp all round-trip.
     "q_log_error_format" -> ((s, dir) => {
-      val conf = Paths.get(sys.props("java.io.tmpdir"), "graft_error.conf")
+      val conf = Paths.get(Scratch.dir("error_conf"), "error.conf")
       Files.write(conf, Seq(
         "# error log config",
         "ErrorLogFormat \"[%t] [%m:%l] [pid %P:tid %T] [client %a] %M\""
@@ -424,9 +412,9 @@ object LogQueries {
     // trip through pure SQL.
     "q_sql_tvf_error" -> ((s, dir) => {
       GraftSql.register(s)
-      val tmp = Paths.get(sys.props("java.io.tmpdir"))
-      val conf = tmp.resolve("graft_tvf_err.conf")
-      val log = tmp.resolve("graft_tvf_err.log")
+      val tmp = Paths.get(Scratch.dir("tvf_err"))
+      val conf = tmp.resolve("tvf_err.conf")
+      val log = tmp.resolve("tvf_err.log")
       Files.write(conf, Seq(
         "ErrorLogFormat \"[%t] [%m:%l] [pid %P:tid %T] [client %a] %M\""
       ).mkString("\n").getBytes(StandardCharsets.UTF_8))

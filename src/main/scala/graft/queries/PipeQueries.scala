@@ -122,34 +122,28 @@ object PipeQueries {
     pre ++ httpHead ++ htmlBytes ++ "\r\n\r\n".getBytes(US_ASCII)
   }
 
-  /** Build (or refresh) a .warc.gz member-archive fixture for `dir`'s
-   * documents under /tmp: members routed by doc_id % 4 with the C111d
+  /** Write a .warc.gz member-archive for `dir`'s documents into a
+   * fresh [[Scratch]] dir: members routed by doc_id % 4 with the C111d
    * charset plants ([[memberSegmentBytes]]), one gzip stream per
    * member, segments concatenated in id order. `dupEvery > 0` appends
    * a re-crawl DUPLICATE of every dupEvery-th doc's whole segment
    * after its member's originals (in id order — the C111c
-   * archive-grain dedup plant). The dir is keyed on the FULL dataset
-   * path (hashCode could collide across dirs — r15 advice) and
-   * rewritten every call so it can never go stale; write-then-rename
-   * with the PID in the tmp name keeps concurrent JVMs from
-   * interleaving (r15 advice). Returns the fixture directory. */
+   * archive-grain dedup plant). Written per call (a private dir, so it
+   * can never go stale or interleave with another JVM). Returns the
+   * archive directory. */
   private def warcFixture(
       s: SparkSession, dir: String, prefix: String, dupEvery: Int): String = {
     val segs = docsPar(s, dir)
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    val outDir = new java.io.File(s"/tmp/${prefix}_" +
-      java.net.URLEncoder.encode(dir, "UTF-8"))
-    outDir.mkdirs()
+    val outDir = new java.io.File(Scratch.dir(prefix))
     segs.groupBy(_._1 % 4).foreach { case (m, rows) =>
-      val tmp = new java.io.File(outDir,
-        s".member$m.warc.gz.${ProcessHandle.current().pid()}.tmp")
       val fin = new java.io.File(outDir, s"member$m.warc.gz")
       // BEST_SPEED: the fixture is rewritten per call and its gzip is
       // the dominant driver-side cost at the tiers (q_c111c x100 read
       // 20.5 s mostly here); the reader sniffs any deflate level
       val os = new java.util.zip.GZIPOutputStream(
-          new java.io.FileOutputStream(tmp)) {
+          new java.io.FileOutputStream(fin)) {
         `def`.setLevel(java.util.zip.Deflater.BEST_SPEED)
       }
       try {
@@ -157,9 +151,6 @@ object PipeQueries {
         if (dupEvery > 0) rows.filter(_._1 % dupEvery == 0)
           .foreach(r => os.write(memberSegmentBytes(r._1, r._2)))
       } finally os.close()
-      java.nio.file.Files.move(tmp.toPath, fin.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     outDir.getAbsolutePath
   }
@@ -717,7 +708,7 @@ object PipeQueries {
     // (binaryFile + gzip sniff, one task per member). The fixture is
     // synthesized at query time from the same analytic segments as
     // q_c111 (4 members, docs routed by doc_id % 4, concatenated in
-    // id order, one gzip stream per member — rewritten every call so
+    // id order, one gzip stream per member — written every call so
     // it can never go stale), so per-member attribution and the
     // member-response counts replay from doc_id arithmetic with no
     // parser in the oracle.
@@ -726,7 +717,7 @@ object PipeQueries {
       // the DIRECTORY, not a glob: Hadoop probes a literal glob path
       // first and logs a loud (caught) FileNotFoundException
       val recs = graft.sources.Warc
-        .read(s, warcFixture(s, dir, "graft_warc_members", dupEvery = 0))
+        .read(s, warcFixture(s, dir, "warc_members", dupEvery = 0))
         .filter(col("warc_type") === "response")
         .select(
           substring_index(col("target_uri"), "/", -1).cast(LongType)
@@ -759,7 +750,7 @@ object PipeQueries {
     // Offsets/lengths replay in SQL from the same segment-length
     // arithmetic that frames the fixture.
     "q_c111c_cdx_index" -> ((s, dir) => {
-      val fix = warcFixture(s, dir, "graft_cdx_members", dupEvery = 50)
+      val fix = warcFixture(s, dir, "cdx_members", dupEvery = 50)
       val recs = graft.sources.Warc.read(s, fix)
         .filter(col("warc_type") === "response")
         .select(
@@ -786,10 +777,7 @@ object PipeQueries {
     // verified. The surviving card's stats + the deletion counts
     // replay analytically.
     "q_c126_snapshot_vacuum" -> ((s, dir) => {
-      val base = s"/tmp/graft_vacuum_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("vacuum")
       val d = docsPar(s, dir).select(col("doc_id"), col("source"),
         TF.tokenCount(col("text")).cast(LongType).as("tokens"))
       graft.sources.Snapshots.publish(d.filter(col("doc_id") % 2 === 0),
@@ -818,10 +806,7 @@ object PipeQueries {
     // sum), delta-aware vacuum retires the chain. Final verified read
     // of the compacted corpus replays analytically; version pins to 3.
     "q_c127_delta_publish" -> ((s, dir) => {
-      val base = s"/tmp/graft_delta_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("delta")
       val d = docsPar(s, dir).select(col("doc_id"), col("source"),
         TF.tokenCount(col("text")).cast(LongType).as("tokens"))
       graft.sources.Snapshots.publish(d.filter(col("doc_id") % 2 === 0),
@@ -846,10 +831,7 @@ object PipeQueries {
     // aggregated entirely in Spark SQL.
     "q_sql_snapshot" -> ((s, dir) => {
       graft.sql.GraftSql.register(s)
-      val base = s"/tmp/graft_sqlsnap_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("sqlsnap")
       val d = docsPar(s, dir).select(col("doc_id"), col("source"),
         col("n_chars"))
       graft.sources.Snapshots.publish(d.filter(col("doc_id") % 2 === 0),
@@ -872,10 +854,7 @@ object PipeQueries {
     // aggregate replays count / payload-md5 sum / byte totals.
     "q_sql_warc" -> ((s, dir) => {
       graft.sql.GraftSql.register(s)
-      val out = s"/tmp/graft_sqlwarc_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("sqlwarc")
       val wet = docsPar(s, dir).filter(col("doc_id") % 20 === 0)
         .select(graft.sources.Warc.wetRecord(
           concat(lit("http://example.com/doc/"),
@@ -899,10 +878,7 @@ object PipeQueries {
     // view's totals; bad_digests ≡ 0 end-to-end.
     "q_sql_hydrate" -> ((s, dir) => {
       graft.sql.GraftSql.register(s)
-      val out = s"/tmp/graft_sqlhyd_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("sqlhyd")
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val fetches = d.unionAll(
           d.filter(col("doc_id") % 50 === 0)
@@ -939,10 +915,7 @@ object PipeQueries {
     // rollup (owners, revisits, bytes actually archived) replays from
     // min-order ownership over text families in SQL.
     "q_c128_archive_dedup" -> ((s, dir) => {
-      val out = s"/tmp/graft_arcdedup_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("arcdedup")
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val fetches = d.unionAll(
           d.filter(col("doc_id") % 50 === 0)
@@ -986,10 +959,7 @@ object PipeQueries {
     // archive would read; digest_ok verifies every restored payload
     // against the revisit's recorded WARC-Payload-Digest.
     "q_c129_archive_hydrate" -> ((s, dir) => {
-      val out = s"/tmp/graft_archyd_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("archyd")
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val fetches = d.unionAll(
           d.filter(col("doc_id") % 50 === 0)
@@ -1037,10 +1007,7 @@ object PipeQueries {
     // them would orphan the revisit's only payload copy). The rollup
     // replays ownership + family liveness in SQL.
     "q_c131_archive_gc" -> ((s, dir) => {
-      val out = s"/tmp/graft_arcgc_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("arcgc")
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val fetches = d.unionAll(
           d.filter(col("doc_id") % 50 === 0)
@@ -1089,10 +1056,7 @@ object PipeQueries {
     // rewrite → vacuum → versioned read → hydrate) must preserve
     // bytes end to end.
     "q_c132_archive_gc_publish" -> ((s, dir) => {
-      val out = s"/tmp/graft_arclc_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("arclc")
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val fetches = d.unionAll(
           d.filter(col("doc_id") % 50 === 0)
@@ -1149,10 +1113,7 @@ object PipeQueries {
     // envelope replays status/mime/link-count analytically.
     "q_c124_wet_wat" -> ((s, dir) => {
       import graft.functions.{HtmlExtract, PayloadDecode, WarcRecords}
-      val out = s"/tmp/graft_wetwat_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = Scratch.dir("wetwat")
       val ex = docsPar(s, dir)
         .select(col("doc_id"),
           WarcRecords(syntheticWarc(col("doc_id"), col("text"))
@@ -1198,25 +1159,22 @@ object PipeQueries {
     // embedding component quantizes through double (exact float
     // widening) so the sum is integer-exact.
     "q_c120_bucketed_join" -> ((s, dir) => {
-      // PID in the warehouse root AND the table names: Verify + Bench
-      // run concurrently on the same dataset dir (the r15 q_c111b
-      // class) and a shared path would let one JVM's DROP+overwrite
-      // clobber the other's in-flight bucketed read (r16 verdict #3)
-      val pid = ProcessHandle.current().pid()
-      val wh = s"/tmp/graft_bucketed_${pid}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
+      // per-run warehouse root (Scratch: per-JVM, so concurrent
+      // Verify + Bench runs never clobber each other's bucketed files
+      // — r16 verdict #3); the table names live in the session catalog
+      val wh = Scratch.dir("bucketed")
       val docs = docsPar(s, dir).select(col("doc_id"), col("source"),
         TF.tokenCount(col("text")).cast(LongType).as("t"))
       val embs = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id").as("doc_id"), col("label"),
           floor(element_at(col("embedding"), 1).cast("double") * 1000)
             .cast(LongType).as("q0"))
-      graft.sources.Bucketed.materialize(docs, s"graft_c120_docs_$pid", 8,
+      graft.sources.Bucketed.materialize(docs, "graft_c120_docs", 8,
         "doc_id", Some(s"$wh/docs"))
-      graft.sources.Bucketed.materialize(embs, s"graft_c120_embs_$pid", 8,
+      graft.sources.Bucketed.materialize(embs, "graft_c120_embs", 8,
         "doc_id", Some(s"$wh/embs"))
       graft.sources.Bucketed
-        .join(s, s"graft_c120_docs_$pid", s"graft_c120_embs_$pid", "doc_id")
+        .join(s, "graft_c120_docs", "graft_c120_embs", "doc_id")
         .groupBy("source", "label")
         .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("tokens"),
           sum(col("q0")).as("q0_sum"))
@@ -1224,19 +1182,13 @@ object PipeQueries {
     }),
 
     // C122: atomic versioned snapshot publishing — v1 (doc counts)
-    // then v2 (counts + token mass) publish under a per-dataset base
-    // rebuilt every call; a planted CRASHED WRITER dir (parquet, no
+    // then v2 (counts + token mass) publish under a fresh per-run
+    // Scratch base; a planted CRASHED WRITER dir (parquet, no
     // _PUBLISHED marker) between them stays invisible, so the real v2
     // lands in slot 3 and the latest-published read returns it. The
     // oracle replays the v2 stats (version pinned to the analytic 3).
     "q_c122_snapshot_publish" -> ((s, dir) => {
-      // PID in the base: the delete-at-start + versioned publishes
-      // race across concurrent Verify/Bench JVMs on a shared path
-      // (r16 verdict #3, the r15 q_c111b class)
-      val base = s"/tmp/graft_snapshots_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("snapshots")
       val d = docsPar(s, dir)
       val v1 = d.groupBy("source").agg(count(lit(1)).as("n_docs"))
       val v2 = d.groupBy("source").agg(count(lit(1)).as("n_docs"),
@@ -1259,10 +1211,7 @@ object PipeQueries {
     // rows come from PARSING the manifest JSON, so the oracle checks
     // what the card SAYS, not what the data would re-derive.
     "q_c123_snapshot_manifest" -> ((s, dir) => {
-      val base = s"/tmp/graft_manifest_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("manifest")
       val d = docsPar(s, dir).select(col("doc_id"), col("source"),
         TF.tokenCount(col("text")).cast(LongType).as("tokens"))
       graft.sources.Snapshots.publish(d, base,
@@ -1287,10 +1236,7 @@ object PipeQueries {
     // complement). v1 = even-id docs, v2 = all docs under one base;
     // the per-source row/token deltas replay in SQL with FILTER.
     "q_c125_manifest_diff" -> ((s, dir) => {
-      val base = s"/tmp/graft_mandiff_${ProcessHandle.current().pid()}_" +
-        java.net.URLEncoder.encode(dir, "UTF-8")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val base = Scratch.dir("mandiff")
       val d = docsPar(s, dir).select(col("doc_id"), col("source"),
         TF.tokenCount(col("text")).cast(LongType).as("tokens"))
       graft.sources.Snapshots.publish(d.filter(col("doc_id") % 2 === 0),
@@ -1810,8 +1756,7 @@ object PipeQueries {
     // p_date=YYYY-MM-DD directories; the read-back date filter prunes
     // partitions before any IO (PartitionFilters, proven in spec)
     "q_sink_partitioned" -> ((s, dir) => {
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sink_" + dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
+      val out = Scratch.dir("sink")
       graft.sources.PartitionedSink.writeByDate(Tables.events(s, dir), out, "ts")
       graft.sources.PartitionedSink.read(s, out)
         .filter(col("p_date").between("2024-01-05", "2024-01-09"))

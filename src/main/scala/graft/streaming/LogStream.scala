@@ -374,8 +374,6 @@ object LogStream {
           posexplode(array(bandCols: _*)).as(Seq("band", "bk")))
         .as[BandKey]
     }
-    // ONE row per bucket: initialState rejects duplicate keys (the
-    // D18 pre-aggregate rule)
     if (hashKeys) {
       // r20 (the batch hashKeys rule at the stream edge): the state
       // key is xxhash64(band, bk) — 8 bytes on the grouping exchange
@@ -386,17 +384,10 @@ object LogStream {
       def keyed(d: Dataset[BandKey]): Dataset[BandKeyK] = d
         .select(col("doc_id"), col("band"),
           xxhash64(col("band"), col("bk")).as("k")).as[BandKeyK]
-      val init = keyed(bandKeys(corpus)
-          .groupBy(col("band"), col("bk"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"), col("band"), col("bk")).as[BandKey])
-        .groupByKey(_.k)
-        .mapValues(_ => TrainMark(1))
-      keyed(bandKeys(docs))
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFuncK)
+      leakGateK(keyed(bandKeys(docs)), keyed(bandKeys(corpus)))
     } else {
+      // ONE row per bucket: initialState rejects duplicate keys (the
+      // D18 pre-aggregate rule)
       val init = bandKeys(corpus)
         .groupBy(col("band"), col("bk"))
         .agg(min(col("doc_id")).as("doc_id"))
@@ -408,6 +399,23 @@ object LogStream {
         .flatMapGroupsWithState(
           OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFunc)
     }
+  }
+
+  /** The hashed D32 gate over pre-keyed bands. The warm-start state is
+   * ONE row per state key `k`, grouped on the hash itself (the D31
+   * rule): two corpus buckets that collide in xxhash64 merge into one
+   * bucket — the documented hashKeys trade, a merged verdict — instead
+   * of duplicate initialState keys, which fail the query. */
+  private[streaming] def leakGateK(
+      cands: Dataset[BandKeyK], corpus: Dataset[BandKeyK]): Dataset[LeakHit] = {
+    import cands.sparkSession.implicits._
+    val init = corpus.select(col("k")).distinct().as[Long]
+      .groupByKey(identity)
+      .mapValues(_ => TrainMark(1))
+    cands
+      .groupByKey(_.k)
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFuncK)
   }
 
   private val leakGateFunc:

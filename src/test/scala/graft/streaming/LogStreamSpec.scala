@@ -154,6 +154,23 @@ class LogStreamSpec extends SparkSpec {
     assert(run(cands.reverse) == fwd)
   }
 
+  test("D32: an xxhash64 collision between corpus buckets merges into one verdict, not a query failure") {
+    implicit val sqlCtx = spark.sqlContext
+    // two DISTINCT corpus buckets, (band 0, bk) and (band 1, bk'),
+    // forced onto ONE state key: initialState must see the key once
+    val corpus = Seq(BandKeyK(1L, 0, 42L), BandKeyK(2L, 1, 42L)).toDS()
+    val mem = MemoryStream[BandKeyK]
+    val name = s"d32_collide_${System.nanoTime()}"
+    val q = LogStream.leakGateK(mem.toDS(), corpus)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      mem.addData(BandKeyK(10L, 2, 42L), BandKeyK(11L, 0, 7L))
+      q.processAllAvailable()
+      assert(spark.table(name).as[LeakHit].collect().toSet == Set(LeakHit(10L, 2)),
+        "a candidate landing on the merged bucket leaks; a fresh key does not")
+    } finally q.stop()
+  }
+
   test("D31/D32 hashKeys parity: xxhash64 state keys produce identical verdicts") {
     // r20: both gates default to 8-byte xxhash64 state keys (the batch
     // hashKeys rule at the stream edge). Verdicts depend only on
